@@ -366,15 +366,9 @@ def _write_monitor_partials(
     _run_concurrent(_monitor_partial_thunks(admitted, dirs, tag, mg_k))
 
 
-# --------------------------------------------------------------------------
-# Erasure swap bookkeeping.  Every dir ``erase_users`` replaces goes
-# through ONE trash root with destination-encoding entry names, so a
-# crash anywhere mid-swap is healed at the next entry point: destination
-# missing -> restore the original (re-running the erasure then redoes
-# it); destination present -> the swap completed, drop the leftover.
-# The trash lives OUTSIDE the data roots so a torn swap can never make a
-# ``b*`` listing raise or a reader see a half-state (ADVICE r12 #1).
-# --------------------------------------------------------------------------
+# erase_users' swap asides live under ONE trash root outside the data
+# roots, named by an encoding of their destination (``fsio`` describes
+# the swap protocol)
 _ERASE_TRASH = "__erase_trash"
 
 
@@ -391,26 +385,17 @@ def _erase_trash_dst(dirs: "IngestDirs", name: str) -> str:
 def _recover_erase_swaps(fs: HadoopFs, dirs: "IngestDirs") -> None:
     trash = os.path.join(dirs.work_dir, _ERASE_TRASH)
     for name, path in fs.list_children(trash):
-        dst = _erase_trash_dst(dirs, name)
-        if fs.exists(dst):
-            fs.delete(path)  # swap completed; the leftover is redundant
-        else:
-            fs.rename(path, dst)  # swap torn: restore the original
+        fs.heal(_erase_trash_dst(dirs, name), path)
     fs.delete(trash)
 
 
-def _swap_in(fs: HadoopFs, dirs: "IngestDirs", new: str, dst: str, trash_name: str) -> None:
-    """Replace ``dst`` with ``new`` crash-consistently: rename the old
-    dir into the trash under its destination-encoding name, rename the
-    new one in, drop the trash entry.  Any tear heals in
-    ``_recover_erase_swaps``."""
-    trash_root = os.path.join(dirs.work_dir, _ERASE_TRASH)
-    fs.mkdirs(trash_root)
-    trash = os.path.join(trash_root, trash_name)
-    if fs.exists(dst):
-        fs.rename(dst, trash)
-    fs.rename(new, dst)
-    fs.delete(trash)
+def _erase_swap(fs: HadoopFs, dirs: "IngestDirs", new: str, name: str) -> None:
+    """Swap ``new`` over the destination ``name`` encodes."""
+    fs.swap(
+        new,
+        _erase_trash_dst(dirs, name),
+        os.path.join(dirs.work_dir, _ERASE_TRASH, name),
+    )
 
 
 def _resolve_initial(fs: HadoopFs, dirs: "IngestDirs") -> None:
@@ -489,13 +474,13 @@ def erase_users(
       ``initial_bits`` to rebuild into (raises otherwise).
 
     Crash story: IDEMPOTENT, not transactional — re-running with the
-    same ``erased_users`` converges, and every dir swap goes through
-    the ``__erase_trash`` protocol healed at each entry point
-    (``_recover_erase_swaps``), so a crash can never strand a torn
-    name inside a data root.  Returns ``{"affected_batches",
-    "rows_erased", "initial_rows_erased"}``."""
+    same ``erased_users`` converges; every dir replacement is an
+    ``fsio`` swap, healed at each entry point (``_recover_erase_swaps``).
+    Returns ``{"affected_batches", "rows_erased",
+    "initial_rows_erased"}``."""
     fs = dirs.fs(spark)
     _recover_erase_swaps(fs, dirs)
+    fs.mkdirs(os.path.join(dirs.work_dir, _ERASE_TRASH))
     _resolve_initial(fs, dirs)
     key_cols = list(key_cols)
 
@@ -505,8 +490,7 @@ def erase_users(
     stats = {"affected_batches": 0, "rows_erased": 0, "initial_rows_erased": 0}
     gone_keys: list[DataFrame] = []
 
-    tmp = os.path.join(dirs.work_dir, f"__erase_tmp_{uuid.uuid4().hex[:8]}")
-    fs.mkdirs(tmp)
+    tmp = os.path.join(dirs.work_dir, "__erase_tmp")  # outputs overwrite
 
     init = spark.read.parquet(dirs.initial)
     if purge_keys:
@@ -520,11 +504,10 @@ def erase_users(
         )
     n_init = init.join(er, "user_id", "semi").count()
     if n_init:
-        cow = os.path.join(dirs.work_dir, "initial_erased")
         out = os.path.join(tmp, "initial_rows")
-        init.join(er, "user_id", "anti").write.parquet(out)
-        _swap_in(fs, dirs, out, cow, "initial")
-        dirs.initial = cow
+        init.join(er, "user_id", "anti").write.mode("overwrite").parquet(out)
+        _erase_swap(fs, dirs, out, "initial")
+        dirs.initial = _erase_trash_dst(dirs, "initial")
         stats["initial_rows_erased"] = n_init
 
     sink_dirs = _batch_dirs(fs, dirs.sink)
@@ -551,8 +534,8 @@ def erase_users(
             (overlapped) → swap.  Returns (rows_erased, gone_keys_frame).
             Self-contained so the TAGS themselves can overlap (guide
             §2.6): each tag touches only its own sink/partial dirs and
-            its own uniquely-named trash entry, and the
-            partials-before-own-swap crash contract (docstring step 3)
+            its own trash entry, and the partials-before-own-swap
+            crash contract (docstring step 3)
             holds per tag exactly as it did sequentially — a crash mid-
             fleet leaves some tags swapped and some not, the same states
             the sequential loop could crash into, and the idempotent
@@ -587,12 +570,12 @@ def erase_users(
             # the partials-before-swap crash contract (docstring step 3)
             # is preserved
             def _rows_out() -> None:
-                kept.write.parquet(out)
+                kept.write.mode("overwrite").parquet(out)
 
             _run_concurrent(
                 [_rows_out] + _monitor_partial_thunks(kept, dirs, tag, mg_k)
             )
-            _swap_in(fs, dirs, out, bdir, f"sink__{tag}")
+            _erase_swap(fs, dirs, out, f"sink__{tag}")
             return n_erased, gone
 
         # 2-3 tags in flight is plenty (guide §2.6) — enough to back-fill
@@ -639,7 +622,7 @@ def _purge_key_material(
     purged sidecar and swap it over the NEWEST ``bits_cum`` snapshot
     (the only one any future batch reads) — or over a work_dir-owned
     ``initial_bits`` when no batch has committed yet.  Both swaps are
-    crash-consistent via the erase-trash protocol."""
+    crash-consistent via ``_erase_swap``."""
     from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     from dvh_airflow_kafka_spark.streaming.keyindex import BUCKET_COL
@@ -686,12 +669,12 @@ def _purge_key_material(
     if cum:
         tag = cum[-1].rstrip("/").rsplit("/", 1)[-1]
         out = os.path.join(tmp, f"bits_{tag}")
-        new_bits.write.parquet(out)
-        _swap_in(fs, dirs, out, cum[-1], f"bitscum__{tag}")
+        new_bits.write.mode("overwrite").parquet(out)
+        _erase_swap(fs, dirs, out, f"bitscum__{tag}")
     else:
         out = os.path.join(tmp, "initial_bits")
-        new_bits.write.parquet(out)
-        _swap_in(fs, dirs, out, owned_init_bits, "initialbits")
+        new_bits.write.mode("overwrite").parquet(out)
+        _erase_swap(fs, dirs, out, "initialbits")
 
 
 _COMPACT_SENTINEL = "_COMPACTED"
@@ -717,9 +700,9 @@ def recover_sink_compaction(spark: SparkSession, dirs: "IngestDirs") -> None:
     (sink consolidated, monitors still per-batch) would break the
     sink-dir ↔ partial-dir correspondence ``erase_users`` rebuilds by.
     Sentinel files are underscore-prefixed, so parquet readers ignore
-    them.  A trash entry whose destination ALREADY exists (a prior
-    recovery crashed mid-restore) is dropped instead of renamed — the
-    present destination is the restored original (ADVICE r12 #4)."""
+    them.  Each trash entry is restored with ``fsio.HadoopFs.heal``: one
+    whose destination ALREADY exists (a prior recovery crashed
+    mid-restore) is dropped instead of renamed (ADVICE r12 #4)."""
     fs = dirs.fs(spark)
     marker = os.path.join(dirs.work_dir, "_compacting")
     tmproot = os.path.join(dirs.work_dir, "__compact_tmp")
@@ -741,11 +724,7 @@ def recover_sink_compaction(spark: SparkSession, dirs: "IngestDirs") -> None:
             if fs.exists(os.path.join(cons, _COMPACT_SENTINEL)):
                 fs.delete(cons)
             for name, path in fs.list_children(trash):
-                dst = os.path.join(r, name)
-                if fs.exists(dst):
-                    fs.delete(path)  # prior recovery already restored it
-                else:
-                    fs.rename(path, dst)
+                fs.heal(os.path.join(r, name), path)
             fs.delete(trash)
     fs.delete(marker)
     fs.delete(tmproot)

@@ -14,22 +14,18 @@ sink's payload width and of how many batches have run.
 
 Crash-correctness — the sidecar is advisory; the *sink* stays the source
 of truth. Per epoch the order is: attempt-marker → probe → sink append →
-sidecar append → (Spark commits the epoch). The dangerous window is a
-crash after the sink append but before the sidecar append: a pure-sidecar
-probe on replay would miss those keys and duplicate them. The attempt
-marker closes it: a batch whose ``_attempted_<epoch>`` marker already
-exists is a RE-attempt (a prior try may have reached the sink), and
-probes the full sink for that one batch instead. So the rare crash-replay
-batch is O(sink) and every normal batch is O(batch) — the same amortized
-contract as the reference's indexed NOT EXISTS.
-
-The sidecar tolerates duplicate keys (replays may append a key twice);
-the anti-join deduplicates the probe side, so duplicates cost bytes, not
-correctness. Appends accrete one small file per batch per touched
-bucket — :meth:`SinkKeyIndex.compact` rewrites the sidecar to one
-deduplicated file per bucket while PRESERVING the partition layout and
-the epoch markers (a generic flat compaction would flatten the
-``bucket=`` dirs and silently disable partition pruning).
+sidecar append → (Spark commits the epoch). A crash after the sink append
+but before the sidecar append would make a pure-sidecar probe miss those
+keys on replay; so a batch whose ``_attempted_<epoch>`` marker already
+exists probes the full sink for that one batch instead. The rare
+crash-replay batch is O(sink) and every normal batch O(batch) — the same
+amortized contract as the reference's indexed NOT EXISTS. Duplicate keys
+from replays cost bytes, not correctness (the anti-join deduplicates the
+probe side). :meth:`SinkKeyIndex.compact` rewrites the sidecar to one
+deduplicated file per bucket, keeping the ``bucket=`` layout (a flat
+compaction would silently disable partition pruning) and the epoch
+markers; it swaps through ``fsio.HadoopFs.swap``, whose protocol is
+described once, in ``streaming/fsio.py``.
 """
 
 from __future__ import annotations
@@ -39,59 +35,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+# perfbench/layers.py:322 looks this name up; same class as fsio's
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs as _Fs  # noqa: F401
+
 BUCKET_COL = "__kidx_bucket"
-
-
-class _Fs:
-    """Thin wrapper over the Hadoop FileSystem API for the sidecar's
-    marker/listing/rename bookkeeping. The sink and index data already go
-    through Spark; driving the metadata ops through
-    ``Path.getFileSystem`` makes the crash-replay machinery work on any
-    store the deployment writes to (HDFS, S3A, local ``file://``) instead
-    of silently no-opping off-box — on a driver-local ``os.*`` view of an
-    object store the markers would never exist and every probe would
-    degrade to "no index"."""
-
-    def __init__(self, spark: SparkSession, base: str) -> None:
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._base = self._jpath(base)
-        self._fs = self._base.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def child(self, name: str):
-        return self._jpath(self._base, name)
-
-    def exists(self, path=None) -> bool:
-        return self._fs.exists(path if path is not None else self._base)
-
-    def mkdirs(self) -> None:
-        self._fs.mkdirs(self._base)
-
-    def touch(self, path) -> bool:
-        return self._fs.createNewFile(path)
-
-    def names(self) -> list[str]:
-        if not self.exists():
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(self._base)]
-
-    def sibling_names(self) -> list[str]:
-        """Entries next to the base dir (used to find orphaned swap
-        halves after a crash mid-compaction)."""
-        parent = self._base.getParent()
-        if parent is None or not self._fs.exists(parent):
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(parent)]
-
-    def rename_sibling_to_base(self, name: str) -> bool:
-        parent = self._base.getParent()
-        return self._fs.rename(self._jpath(parent, name), self._base)
-
-    def rename_to(self, dst: "_Fs") -> bool:
-        return self._fs.rename(self._base, dst._base)
-
-    def delete(self) -> None:
-        self._fs.delete(self._base, True)
 
 
 class SinkKeyIndex:
@@ -109,7 +58,9 @@ class SinkKeyIndex:
         self.path = sink_path.rstrip("/") + "__keys"
         self.keys = list(keys)
         self.n_buckets = n_buckets
-        self._fs = _Fs(spark, self.path)
+        self._fs = HadoopFs(spark, self.path)
+        self._new = self.path + ".__new"
+        self._aside = self.path + ".__old"
         # sidecar schema is fixed after the first write (key columns +
         # the bucket partition column); cache it so per-batch probes
         # skip the driver-side footer-inference pass (guide §6)
@@ -127,26 +78,6 @@ class SinkKeyIndex:
         paying a dedicated collect job."""
         return self._bucket()
 
-    def _recover_interrupted_swap(self) -> None:
-        """Close the compaction crash window: ``compact`` swaps with
-        rename-aside → rename-in, and a crash BETWEEN the renames leaves
-        no base dir while the old index sits in a ``.__old_*`` sibling.
-        Without recovery the next probe would see "no index", skip the
-        sink probe, and silently admit duplicates — so before any epoch
-        work, if the base is missing but a swap half exists, restore it
-        (the conservative choice: the old pre-compaction index is always
-        a correct superset probe)."""
-        if self._fs.exists():
-            return
-        base_name = self.path.rstrip("/").rsplit("/", 1)[-1]
-        orphans = sorted(
-            n
-            for n in self._fs.sibling_names()
-            if n.startswith(f"{base_name}.__old_")
-        )
-        if orphans:
-            self._fs.rename_sibling_to_base(orphans[0])
-
     def seed(self, keys: DataFrame) -> None:
         """Idempotently seed the sidecar with a pre-existing sink's keys
         (e.g. the ingest pipeline's initial sink), once per sidecar.
@@ -156,14 +87,13 @@ class SinkKeyIndex:
         sidecar is safe to wipe and rebuild.  After the marker exists
         the sidecar is never wiped (``compact`` carries the marker
         over)."""
-        self._recover_interrupted_swap()
-        marker = self._fs.child("_seeded")
-        if self._fs.exists() and self._fs.exists(marker):
+        self._fs.heal(self.path, self._aside)
+        marker = f"{self.path}/_seeded"
+        if self._fs.exists(marker):
             return
-        if self._fs.exists():
-            self._fs.delete()
+        self._fs.delete(self.path)
         self.append(keys)
-        self._fs.mkdirs()  # zero-row seeds write no bucket dirs
+        self._fs.mkdirs(self.path)  # zero-row seeds write no bucket dirs
         self._fs.touch(marker)
 
     def begin_epoch(self, epoch_id: int) -> bool:
@@ -171,16 +101,18 @@ class SinkKeyIndex:
         prior attempt exists — the caller must then probe the sink itself
         (the prior attempt may have appended to the sink without reaching
         the sidecar append)."""
-        self._recover_interrupted_swap()
-        self._fs.mkdirs()
-        marker = self._fs.child(f"_attempted_{epoch_id}")
+        self._fs.heal(self.path, self._aside)
+        self._fs.mkdirs(self.path)
+        marker = f"{self.path}/_attempted_{epoch_id}"
         if self._fs.exists(marker):
             return True
         self._fs.touch(marker)
         return False
 
     def _has_data(self) -> bool:
-        return any(e.startswith(f"{BUCKET_COL}=") for e in self._fs.names())
+        return any(
+            e.startswith(f"{BUCKET_COL}=") for e in self._fs.list_names(self.path)
+        )
 
     def probe(
         self, batch: DataFrame, buckets: Optional[list] = None
@@ -252,17 +184,9 @@ class SinkKeyIndex:
         stays a superset of the (erased) sink's keys because the erased
         rows are gone from the sink too; a re-delivered erased message
         is then ADMITTED by design — the caller chooses that policy."""
-        import uuid
-
-        self._recover_interrupted_swap()
-        # clear stale swap halves from an earlier interrupted compaction
-        base_name = self.path.rstrip("/").rsplit("/", 1)[-1]
-        for n in self._fs.sibling_names():
-            if n.startswith(f"{base_name}.__compact_") or n.startswith(
-                f"{base_name}.__old_"
-            ):
-                _Fs(self.spark, f"{self.path.rsplit('/', 1)[0]}/{n}").delete()
-        if not self._has_data():
+        self._fs.heal(self.path, self._aside)
+        entries = self._fs.list_names(self.path)
+        if not any(e.startswith(f"{BUCKET_COL}=") for e in entries):
             return
         idx = self.spark.read.parquet(self.path).dropDuplicates(
             self.keys + [BUCKET_COL]
@@ -271,23 +195,19 @@ class SinkKeyIndex:
             idx = idx.join(
                 purge.select(*self.keys).distinct(), self.keys, "anti"
             )
-        tmp = _Fs(self.spark, f"{self.path}.__compact_{uuid.uuid4().hex[:8]}")
         (
             # pinned like append(): one writer task per bucket, no AQE
             # stage-replan barrier on a tiny job
             idx.repartition(self.n_buckets, F.col(BUCKET_COL))
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
-            .parquet(tmp._base.toString())
+            .parquet(self._new)
         )
         # carry the epoch + seed markers over: losing ``_attempted_``
         # would blind crash-replay detection; losing ``_seeded`` would
         # make the next ``seed()`` call wipe the (batch-key-bearing!)
         # sidecar and rebuild it initial-keys-only — silent duplicates
-        for entry in self._fs.names():
+        for entry in entries:
             if entry.startswith("_attempted_") or entry == "_seeded":
-                tmp.touch(tmp.child(entry))
-        trash = _Fs(self.spark, f"{self.path}.__old_{uuid.uuid4().hex[:8]}")
-        self._fs.rename_to(trash)
-        tmp.rename_to(self._fs)
-        trash.delete()
+                self._fs.touch(f"{self._new}/{entry}")
+        self._fs.swap(self._new, self.path, self._aside)

@@ -3,6 +3,10 @@ shrink, matched keys replaced, unmatched appended."""
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.io import load_table
@@ -121,27 +125,116 @@ def test_maintenance_recovers_interrupted_swap(spark, sf_dir, tmp_path):
     happen', never to a vanished table."""
     from pyspark.sql import functions as F
 
-    from dvh_airflow_kafka_spark.io import (
-        HadoopFs,
-        load_table,
-        recover_interrupted_swap,
-    )
+    from dvh_airflow_kafka_spark.io import load_table
     from dvh_airflow_kafka_spark.operators.maintenance import compact_parquet
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     path = str(tmp_path / "ev")
     ev.write.parquet(path)
     n = spark.read.parquet(path).count()
+    fs = HadoopFs(spark, path)
     # simulate: base renamed aside, replacement never landed
-    assert HadoopFs(spark, path).rename_to(
-        HadoopFs(spark, path + ".__old_cafe01")
-    )
-    assert not HadoopFs(spark, path).exists()
-    assert recover_interrupted_swap(spark, path) is True
+    fs.rename(path, path + ".__old")
+    assert not fs.exists(path)
+    fs.heal(path, path + ".__old")
+    assert fs.exists(path) and not fs.exists(path + ".__old")  # restored
     assert spark.read.parquet(path).count() == n
     # the maintenance ops self-heal: rename aside again, then compact
-    assert HadoopFs(spark, path).rename_to(
-        HadoopFs(spark, path + ".__old_cafe02")
-    )
+    fs.rename(path, path + ".__old")
     compact_parquet(spark, path, target_file_bytes=1 << 30)
     assert spark.read.parquet(path).count() == n
+
+
+class _Crash(Exception):
+    pass
+
+
+def test_stale_swap_leftover_is_deleted_and_newest_restored(
+    spark, tmp_path, monkeypatch
+):
+    """A completed rewrite that crashed before dropping its aside, then a
+    later rewrite torn between its renames: the leftover must not
+    outlive the next maintenance call (it still holds erased rows), and
+    recovery must restore the NEWEST table, not the leftover."""
+    from dvh_airflow_kafka_spark.operators.maintenance import (
+        compact_parquet,
+        delete_where,
+    )
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1,), (2,), (3,)], "k long").write.parquet(path)
+
+    def keys(p):
+        return sorted(r.k for r in spark.read.parquet(p).collect())
+
+    real_delete, real_rename = HadoopFs.delete, HadoopFs.rename
+
+    def crash_on_aside_delete(self, p):
+        if p.endswith(".__old"):
+            raise _Crash
+        real_delete(self, p)
+
+    def crash_on_rename_in(self, src, dst):
+        if src.endswith(".__new"):
+            raise _Crash
+        real_rename(self, src, dst)
+
+    # 1. the erasure swap lands, the aside (still holding k=1) stays
+    monkeypatch.setattr(HadoopFs, "delete", crash_on_aside_delete)
+    with pytest.raises(_Crash):
+        delete_where(spark, path, F.col("k") == 1)
+    monkeypatch.setattr(HadoopFs, "delete", real_delete)
+    assert keys(path) == [2, 3]
+
+    # 2. the next rewrite tears between its two renames
+    monkeypatch.setattr(HadoopFs, "rename", crash_on_rename_in)
+    with pytest.raises(_Crash):
+        delete_where(spark, path, F.col("k") == 2)
+    monkeypatch.setattr(HadoopFs, "rename", real_rename)
+    siblings = [p for p in glob.glob(path + "*") if p != path]
+    assert siblings, "the tear left no aside to restore from"
+    for sib in siblings:
+        assert 1 not in keys(sib), f"erased row survives in {sib}"
+
+    # 3. the next maintenance call restores the newest table
+    compact_parquet(spark, path, target_file_bytes=1 << 30)
+    assert keys(path) == [2, 3]
+    assert glob.glob(path + "*") == [path]
+
+
+def test_crashed_rewrite_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """A crash after the temp write, before the swap, must not leave a
+    temp dir behind once the rewrite is re-run — for every rewrite."""
+    from dvh_airflow_kafka_spark.operators.maintenance import (
+        compact_parquet,
+        delete_where,
+        merge_upsert,
+        zorder_layout,
+    )
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    path = str(tmp_path / "t")
+    rows = [(i, i % 3) for i in range(6)]
+    spark.createDataFrame(rows, "k long, v long").write.parquet(path)
+    updates = spark.createDataFrame([(0, 9), (7, 9)], "k long, v long")
+    rewrites = [
+        lambda: compact_parquet(spark, path, target_file_bytes=1 << 30),
+        lambda: merge_upsert(spark, path, updates, ["k"]),
+        lambda: zorder_layout(spark, path, ["k", "v"], n_files=2),
+        lambda: delete_where(spark, path, F.col("k") == 1),
+    ]
+
+    def crash(self, src, dst):
+        raise _Crash
+
+    for rewrite in rewrites:
+        monkeypatch.setattr(HadoopFs, "rename", crash)
+        with pytest.raises(_Crash):
+            rewrite()
+        monkeypatch.undo()
+        rewrite()
+        assert os.listdir(tmp_path) == ["t"]
+    out = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert out == [(0, 9), (2, 2), (3, 0), (4, 1), (5, 2), (7, 9)]

@@ -43,17 +43,19 @@ from tests.test_round12_ops import (
 # --------------------------------------------------------------------------
 
 
-def test_ingest_module_has_no_driver_local_fs_calls():
+@pytest.mark.parametrize("module", ["ingest", "keyindex", "fsio"])
+def test_ingest_module_has_no_driver_local_fs_calls(module):
     # the artifact layer's swaps/sentinels only exist on object stores
     # if they go through the Hadoop FS API (VERDICT r12 "missing" #1) —
-    # pin the module source free of every driver-local escape hatch it
-    # used through round 12.  os.path.join/basename stay: pure string
-    # ops, scheme-safe.
+    # pin the module sources free of every driver-local escape hatch
+    # ingest used through round 12.  os.path.join/basename stay: pure
+    # string ops, scheme-safe.
+    import importlib
     import inspect
 
-    import dvh_airflow_kafka_spark.streaming.ingest as mod
-
-    src = inspect.getsource(mod)
+    mod = importlib.import_module(f"dvh_airflow_kafka_spark.streaming.{module}")
+    # the Hadoop FileSystem handle's own ``open`` is the FS API itself
+    src = inspect.getsource(mod).replace("self._fs.open(", "")
     banned = [
         "glob.glob",
         "import glob",
@@ -166,6 +168,31 @@ def test_erase_swap_recovery_heals_torn_sink_dir(spark, tmp_path):
     erase_users(spark, dirs, spark.createDataFrame([(1,)], "user_id long"))
     assert not os.path.exists(trash)
     assert sorted(map(tuple, dirs.admitted(spark, init).collect())) == after
+
+
+def test_erase_crash_after_temp_write_leaves_no_temp_dir(
+    spark, tmp_path, monkeypatch
+):
+    # a crash after the rewritten rows are written but before any swap:
+    # the re-run replaces that attempt's temp output instead of leaving
+    # one temp dir per attempt in the work_dir
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.ingest import erase_users
+
+    dirs = _drain_simple(spark, tmp_path)
+    erased = spark.createDataFrame([(1,)], "user_id long")
+
+    def crash(self, src, dst):
+        raise RuntimeError("injected crash before the swap")
+
+    monkeypatch.setattr(HadoopFs, "rename", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        erase_users(spark, dirs, erased)
+    monkeypatch.undo()
+    assert erase_users(spark, dirs, erased)["rows_erased"] == 3
+    assert not [
+        n for n in os.listdir(dirs.work_dir) if n.startswith("__erase")
+    ]
 
 
 def test_erasure_persists_across_runs(spark, tmp_path):

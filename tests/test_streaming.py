@@ -243,9 +243,10 @@ def test_quarantine_dead_letters_error_rows(spark, source_dir, tmp_path):
 
 def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     """A crash BETWEEN compact()'s two renames leaves no sidecar; the
-    next epoch must restore the .__old_* half instead of silently
+    next epoch must restore the .__old half instead of silently
     probing nothing (which would admit duplicates)."""
-    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex, _Fs
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     sink = str(tmp_path / "sink")
     idx = SinkKeyIndex(spark, sink, ["event_id"], n_buckets=4)
@@ -255,8 +256,7 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     assert idx.probe(batch) is not None
 
     # simulate the crash window: base renamed aside, new half never landed
-    trash = _Fs(spark, idx.path + ".__old_deadbeef")
-    assert _Fs(spark, idx.path).rename_to(trash)
+    HadoopFs(spark, idx.path).rename(idx.path, idx.path + ".__old")
     assert idx.probe(batch) is None  # the dangerous state
 
     # next epoch recovers the swap half before doing anything else
@@ -266,6 +266,31 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
 
     # compact() clears any stale halves and stays probe-able
     idx.compact()
+    assert idx.probe(batch).count() == 50
+
+
+def test_keyindex_compact_crash_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """A compaction that crashes after writing its replacement, then is
+    re-run, leaves only the sidecar next to the sink."""
+    import os
+
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
+
+    idx = SinkKeyIndex(spark, str(tmp_path / "sink"), ["event_id"], n_buckets=4)
+    batch = spark.createDataFrame([(i,) for i in range(50)], "event_id long")
+    idx.begin_epoch(0)
+    idx.append(batch)
+
+    def crash(self, src, dst):
+        raise RuntimeError("injected crash before the swap")
+
+    monkeypatch.setattr(HadoopFs, "rename", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.compact()
+    monkeypatch.undo()
+    idx.compact()
+    assert os.listdir(tmp_path) == ["sink__keys"]
     assert idx.probe(batch).count() == 50
 
 
